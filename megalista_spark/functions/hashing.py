@@ -20,9 +20,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# what str.strip() strips (up to U+3000), not only F.trim's ASCII spaces
+_WHITESPACE = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
+
 
 def _lower_trim(col: Column) -> Column:
-    return F.lower(F.trim(col))
+    return F.lower(F.trim(col, F.lit(_WHITESPACE)))
 
 
 def hash_field(col: Column, hash_enabled: bool = True) -> Column:

@@ -9,7 +9,7 @@ Spark shape:
 - the config plane stays on the driver (it is tiny);
 - each source is READ ONCE and cached across the branches that share it
   (reference reads per source group; SURVEY §4 "read-once-per-source");
-- each branch is lazy DataFrame work ending in one action inside a
+- each branch is lazy DataFrame work run by one sink job inside a
   try/except — a failing branch records an error and the run continues
   (reference safe_process error isolation, uploaders/utils.py:69-88);
 - the run summary is a driver-side list of per-branch results; exit code 1
@@ -148,18 +148,19 @@ class Pipeline:
             transform = _TRANSFORMS.get(dtype)
             if transform is not None:
                 df = transform(df)
-            res.rows_read = df.count()
-
-            sink = SinkExecutor.for_destination(
+            outcome = SinkExecutor.for_destination(
                 self.transport_factory(execution), dtype
-            )
-            outcome = sink.run(df)
-            res.rows_uploaded = outcome.success.count()
-            res.errors.extend(r["message"] for r in outcome.errors.collect())
-
-            if txn != TransactionalType.NOT_TRANSACTIONAL and res.rows_uploaded > 0:
-                # U20/D5: persist successfully-uploaded keys
-                control.append(outcome.success.select(*txn.keys))
+            ).run(df)
+            try:
+                res.rows_read = sum(outcome.counts.values())
+                res.rows_uploaded = outcome.counts["ok"]
+                if outcome.counts["error"]:
+                    res.errors.extend(r["message"] for r in outcome.errors.collect())
+                if txn != TransactionalType.NOT_TRANSACTIONAL and res.rows_uploaded > 0:
+                    # U20/D5: persist successfully-uploaded keys
+                    control.append(outcome.success.select(*txn.keys))
+            finally:
+                outcome.release()
         except SchemaValidationError as exc:
             res.errors.append(str(exc))
         except Exception as exc:  # branch isolation (safe_process)

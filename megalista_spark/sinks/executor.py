@@ -16,12 +16,12 @@ Reference behaviors folded in (SURVEY §4 "custom pieces"):
   accepted rows so downstream (control-table append, summary) stays
   relational (J3)
 
-Scale design: the upload is `mapInPandas`-free and collect-free — each
-partition streams its rows through the transport and yields accepted rows
-back as Arrow batches. Parallelism is bounded by `repartition(n)` before
-calling run() (API quota control), not by driver-side loops. Errors travel
-in-band as a struct column, so one action produces both the success rows
-and the error records (no second pass over the source).
+Scale design: one Spark job per run performs the sends. Each partition
+streams its rows through the transport and stores every row tagged ok /
+rejected / error; only per-status counts are collected. The success rows
+and error records read that stored outcome, so they never re-send.
+Parallelism is bounded by `repartition(n)` before calling run() (API quota
+control), not by loops in the caller.
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ from collections import Counter
 from dataclasses import dataclass
 from typing import Any, Iterator
 
+from pyspark import RDD, StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -72,27 +73,49 @@ RATE_LIMITS: dict[DestinationType, float] = {
 
 _STATUS_COL = "__megalista_status"
 _ERROR_COL = "__megalista_error"
+_NAN = object()  # NaN != NaN: one key for every NaN so rebuilt rows match
 
 
 def _freeze(v: Any) -> Any:
-    """Hashable canonical form of a row dict (nested dicts/lists allowed)
-    for value-level accepted-row matching."""
+    """Hashable value key of anything ``Row.asDict(recursive=True)`` holds:
+    nested dicts/lists, ``bytearray`` (BinaryType), NaN."""
     if isinstance(v, dict):
         return tuple(sorted((k, _freeze(x)) for k, x in v.items()))
     if isinstance(v, (list, tuple)):
         return tuple(_freeze(x) for x in v)
+    if isinstance(v, bytearray):
+        return bytes(v)
+    if isinstance(v, float) and v != v:
+        return _NAN
     return v
+
+
+def accepted_flags(chunk: list[dict], accepted: list[dict]) -> list[bool]:
+    """Which chunk rows the transport accepted, matched by value: each
+    accepted row marks one equal chunk row, so a transport may return the
+    dicts it was given or rebuilt copies. O(len(chunk) + len(accepted))."""
+    remaining = Counter(map(_freeze, accepted))
+    flags = []
+    for key in map(_freeze, chunk):
+        hit = remaining[key] > 0
+        remaining[key] -= hit
+        flags.append(hit)
+    return flags
 
 
 @dataclass
 class SinkResult:
-    """Outcome of one sink run: accepted rows + error records."""
+    """Outcome of one sink run: rows per status (ok / rejected / error), and
+    ``success``/``errors`` frames that read the outcome the run stored, so
+    they never re-send. ``release()`` frees the stored outcome."""
 
     success: DataFrame
     errors: DataFrame
+    counts: Counter
+    _stored: RDD
 
-    def error_count(self) -> int:
-        return self.errors.count()
+    def release(self) -> None:
+        self._stored.unpersist()
 
 
 class SinkExecutor:
@@ -124,11 +147,8 @@ class SinkExecutor:
         return cls(transport, **kw)
 
     def run(self, df: DataFrame) -> SinkResult:
-        """One pass: upload, return (success rows, error records).
-
-        The returned success DataFrame has the input schema; errors carry
-        (partition_id, chunk_index, attempt_count, message).
-        """
+        """Upload ``df`` in one Spark job. ``success`` has the input schema;
+        ``errors`` carry (destination, message). Release the result when done."""
         if self.max_parallelism is not None:
             df = df.repartition(self.max_parallelism)
 
@@ -142,31 +162,22 @@ class SinkExecutor:
         rate = self.rate_limit_per_sec
         base_context = dict(self.context)
 
-        in_schema = df.schema
-        out_schema = T.StructType(
-            list(in_schema.fields)
-            + [
-                T.StructField(_STATUS_COL, T.StringType(), False),
-                T.StructField(_ERROR_COL, T.StringType(), True),
-            ]
-        )
-        in_cols = [f.name for f in in_schema.fields]
+        in_cols = df.columns
+        out_schema = T.StructType([
+            *df.schema.fields,
+            T.StructField(_STATUS_COL, T.StringType(), False),
+            T.StructField(_ERROR_COL, T.StringType(), True),
+        ])
 
         def process_partition(rows: Iterator[Any]) -> Iterator[tuple]:
             from pyspark import TaskContext
 
-            pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-            ctx = dict(base_context)
-            ctx["partition_id"] = pid
+            ctx = dict(base_context, partition_id=TaskContext.get().partitionId())
             transport.open(ctx)
             limiter = RateLimiter(rate)
             try:
-                chunk_index = 0
-                while True:
-                    chunk = list(itertools.islice(rows, batch_size))
-                    if not chunk:
-                        break
-                    chunk_index += 1
+                chunks = iter(lambda: list(itertools.islice(rows, batch_size)), [])
+                for chunk_index, chunk in enumerate(chunks, start=1):
                     ctx["chunk_index"] = chunk_index
                     ctx["iteration"] = chunk_index  # reference Batch.iteration
                     dict_chunk = [r.asDict(recursive=True) for r in chunk]
@@ -183,43 +194,28 @@ class SinkExecutor:
                                 time.sleep(min(0.05 * attempt, 1.0))
                     if accepted is None:
                         # whole chunk failed after retries → error records
-                        for d in dict_chunk:
-                            yield tuple(d.get(c) for c in in_cols) + ("error", err)
+                        for row in chunk:
+                            yield (*row, "error", err)
                         continue
-                    # Accepted-row matching: identity fast path (transports
-                    # that return the same dict objects), with a value-level
-                    # multiset fallback for transports that return
-                    # equal-but-reconstructed dicts — the Transport contract
-                    # only promises "the ACCEPTED row dicts", not the same
-                    # objects.
-                    accepted_ids = {id(d) for d in accepted}
-                    rebuilt = Counter(
-                        _freeze(d) for d in accepted if id(d) not in {id(c) for c in dict_chunk}
-                    )
-                    for d in dict_chunk:
-                        ok = id(d) in accepted_ids
-                        if not ok and rebuilt:
-                            key = _freeze(d)
-                            if rebuilt.get(key, 0) > 0:
-                                rebuilt[key] -= 1
-                                ok = True
-                        yield tuple(d.get(c) for c in in_cols) + (
-                            "ok" if ok else "rejected",
-                            None,
-                        )
+                    for row, ok in zip(chunk, accepted_flags(dict_chunk, accepted)):
+                        yield (*row, "ok" if ok else "rejected", None)
             finally:
                 transport.close(ctx)
 
-        tagged = df.rdd.mapPartitions(process_partition).toDF(out_schema)
-        # One lineage, two lazily-derived views; caller actions decide when
-        # the upload actually runs. Cache so success+errors don't re-upload.
-        tagged = tagged.cache()
+        stored = df.rdd.mapPartitions(process_partition)
+        # Stored by the one job below, then cut from its lineage: later reads
+        # use the stored rows (or fail if they are lost), never re-send.
+        stored.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
+        try:
+            per_part = stored.mapPartitions(lambda rows: [Counter(r[-2] for r in rows)])
+            counts = sum(per_part.collect(), Counter())
+        except BaseException:
+            stored.unpersist()
+            raise
+        tagged = stored.toDF(out_schema)
         success = tagged.where(F.col(_STATUS_COL) == "ok").select(*in_cols)
-        errors = (
-            tagged.where(F.col(_STATUS_COL) == "error")
-            .select(
-                F.lit(base_context.get("destination_type", "")).alias("destination"),
-                F.col(_ERROR_COL).alias("message"),
-            )
+        errors = tagged.where(F.col(_STATUS_COL) == "error").select(
+            F.lit(base_context.get("destination_type", "")).alias("destination"),
+            F.col(_ERROR_COL).alias("message"),
         )
-        return SinkResult(success=success, errors=errors)
+        return SinkResult(success, errors, counts, stored)

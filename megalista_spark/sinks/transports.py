@@ -12,8 +12,8 @@ exact request payload). Here the transport is an injectable strategy so:
   service/HTTP seams, request-golden tests in tests/test_adapters.py
 
 A transport receives one chunk (list of row dicts) and returns the list of
-ACCEPTED row dicts — partial failure is modeled by returning a subset
-(reference success-filter semantics J3,
+ACCEPTED row dicts (matched by value, so copies are fine) — partial failure
+is modeled by returning a subset (reference success-filter semantics J3,
 google_ads_offline_conversions_uploader.py:154-161).
 """
 
@@ -31,7 +31,7 @@ class TransportError(RuntimeError):
 
 class Transport:
     """Strategy interface. Subclasses must be picklable (they're shipped to
-    executors inside the foreachPartition closure)."""
+    executors inside the mapPartitions closure)."""
 
     def send(self, payload: list[Row], context: dict[str, Any]) -> list[Row]:
         raise NotImplementedError

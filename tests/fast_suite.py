@@ -93,6 +93,11 @@ FAST_TESTS = frozenset(
         # pipeline / sinks / adapters / config / schema / sources
         "test_e2e_idempotent_run",
         "test_all_accepted",
+        "test_accepted_flags_match_by_value",
+        "test_accepted_flags_scale_linearly",
+        "test_status_counts_and_reads_never_resend",
+        "test_run_sends_each_chunk_once_and_leaves_nothing_persisted",
+        "test_foreach_batch_sink_bridge_releases_every_batch",
         "test_ads_oci_payload_golden",
         "test_sheet_config_only_yes_schedules",
         "test_required_missing_raises",

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from megalista_spark.functions.hashing import (
@@ -35,6 +36,14 @@ def test_hash_field_golden(spark):
     df = spark.createDataFrame([(v,) for v, _ in GOLDEN], ["x"])
     got = [r[0] for r in df.select(hash_field(F.col("x"))).collect()]
     assert got == [h for _, h in GOLDEN]
+
+
+@pytest.mark.parametrize("pad", ["\t", "\n", "\r\n", "\x0b", "\x0c", "\xa0"])
+def test_hash_field_strips_like_str_strip(spark, pad):
+    values = [f"{pad}John{pad}", f"{pad} Doe", f"Mary{pad}Ann {pad}"]
+    df = spark.createDataFrame([(v,) for v in values], ["x"])
+    got = [r[0] for r in df.select(hash_field(F.col("x"))).collect()]
+    assert got == [hashlib.sha256(v.strip().lower().encode()).hexdigest() for v in values]
 
 
 def test_hash_email_golden(spark):

@@ -10,6 +10,7 @@ import pytest
 from megalista_spark.models.execution import DestinationType
 from megalista_spark.pipeline import Pipeline, run_from_config
 from megalista_spark.sinks.transports import MockTransport, Transport, TransportError
+from test_sink_executor import LoggingTransport, read_send_log
 
 
 def write_config(tmp_path, src_path, connections):
@@ -145,3 +146,35 @@ def test_error_notifier_called_with_failed_branches(spark, tmp_path, conversions
     sent.clear()
     r2 = run_from_config(spark, cfg, lambda e: MockTransport(), error_notifier=notifier)
     assert r2.exit_code == 0 and sent == []
+
+
+def test_run_sends_each_chunk_once_and_leaves_nothing_persisted(
+    spark, tmp_path, conversions_path
+):
+    cfg = write_config(
+        tmp_path,
+        conversions_path,
+        [
+            {"Enabled": True, "Source": "conv", "Destination": "oci"},
+            {"Enabled": True, "Source": "conv", "Destination": "cm"},
+        ],
+    )
+    log_dir = tmp_path / "sends"
+    log_dir.mkdir()
+    jsc = spark.sparkContext._jsc
+    persisted_before = set(jsc.getPersistentRDDs().keys())
+    # every chunk's first attempt fails and is retried by the executor
+    r = run_from_config(
+        spark, cfg, lambda e: LoggingTransport(str(log_dir), fail_chunks_until_attempt=2)
+    )
+    assert r.exit_code == 0
+    assert [(b.rows_read, b.rows_uploaded) for b in r.branches] == [(20, 20), (20, 20)]
+    sends = read_send_log(str(log_dir))
+    # counting rows, listing errors and the control append re-sent nothing
+    assert sends and all([a for a, _ in s] == [1, 2] for s in sends.values())
+    for dest in ("ADS_OFFLINE_CONVERSION", "ADS_CUSTOMER_MATCH_CONTACT_INFO_UPLOAD"):
+        assert sum(n for (d, _, _), s in sends.items() if d == dest for _, n in s[1:]) == 20
+    assert set(jsc.getPersistentRDDs().keys()) <= persisted_before
+    # the control table got the uploaded keys: a rerun reads nothing new
+    r2 = run_from_config(spark, cfg, lambda e: MockTransport())
+    assert by_name_rows(r2, "oci").rows_read == 0

@@ -2,9 +2,46 @@
 
 from __future__ import annotations
 
+import copy
+import json
+import os
+import time
+
 from megalista_spark.models.execution import DestinationType
-from megalista_spark.sinks.executor import BATCH_SIZES, SinkExecutor
-from megalista_spark.sinks.transports import DryRunTransport, MockTransport
+from megalista_spark.sinks.executor import BATCH_SIZES, SinkExecutor, accepted_flags
+from megalista_spark.sinks.transports import DryRunTransport, MockTransport, Transport
+
+
+class LoggingTransport(MockTransport):
+    """MockTransport that appends one JSON line per send attempt
+    ``[destination_type, partition_id, chunk_index, attempt, rows]`` to a
+    file of its own task under ``log_dir``."""
+
+    def __init__(self, log_dir, **kw):
+        super().__init__(**kw)
+        self.log_dir = log_dir
+
+    def send(self, payload, context):
+        from pyspark import TaskContext
+
+        chunk = context["chunk_index"]
+        entry = [context.get("destination_type"), context["partition_id"], chunk,
+                 self._attempts.get(chunk, 0) + 1, len(payload)]
+        path = os.path.join(self.log_dir, f"task-{TaskContext.get().taskAttemptId()}.jsonl")
+        with open(path, "a") as f:
+            f.write(json.dumps(entry) + "\n")
+        return super().send(payload, context)
+
+
+def read_send_log(log_dir):
+    """Send attempts per chunk: {(destination, partition, chunk): [(attempt, rows)]}."""
+    sends: dict[tuple, list] = {}
+    for name in os.listdir(log_dir):
+        with open(os.path.join(log_dir, name)) as f:
+            for line in f:
+                dest, pid, chunk, attempt, rows = json.loads(line)
+                sends.setdefault((dest, pid, chunk), []).append((attempt, rows))
+    return sends
 
 
 def test_all_accepted(spark):
@@ -25,17 +62,79 @@ def test_partial_failure_success_filter(spark):
 
 def test_accepted_rows_matched_by_value_not_identity(spark):
     # a Transport that returns equal-but-RECONSTRUCTED dicts (the documented
-    # contract only promises "the accepted row dicts") must still mark rows ok
-    from megalista_spark.sinks.transports import Transport
-
+    # contract only promises "the accepted row dicts") must still mark rows
+    # ok, including BinaryType values, which arrive as (unhashable)
+    # bytearrays when binaryAsBytes is off
     class RebuildingTransport(Transport):
         def send(self, payload, context):
-            return [dict(r) for r in payload if r["k"] % 5 != 0]
+            return copy.deepcopy([r for r in payload if r["k"] % 5 != 0])
 
-    df = spark.createDataFrame([(i,) for i in range(50)], ["k"])
-    result = SinkExecutor(RebuildingTransport(), batch_size=10).run(df)
+    key = "spark.sql.execution.pyspark.binaryAsBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = spark.createDataFrame([(i, bytearray([i])) for i in range(50)], "k int, b binary")
+        result = SinkExecutor(RebuildingTransport(), batch_size=10).run(df)
+    finally:
+        spark.conf.set(key, prev)
     ok = sorted(r["k"] for r in result.success.collect())
     assert ok == [i for i in range(50) if i % 5 != 0]
+
+
+ROW = {"k": 1, "s": None, "b": bytearray(b"\x00\xff"), "f": float("nan"),
+       "nested": {"tags": ["a", "b"], "m": {"x": 1.5}, "st": {"z": None}}}
+
+
+def test_accepted_flags_match_by_value():
+    a, b = dict(ROW), dict(ROW, k=2)
+    # duplicates: each accepted row marks exactly one equal chunk row
+    assert accepted_flags([a, dict(a), b], [a]) == [True, False, False]
+    assert accepted_flags([a, dict(a), b], [a, a]) == [True, True, False]
+    # reconstructed copies (new dicts, lists, bytearrays and NaN objects)
+    # match, whatever their key order
+    rebuilt = dict(reversed(list(copy.deepcopy(b).items())))
+    rebuilt["f"] = float("nan")  # a different NaN object
+    assert accepted_flags([a, b], [rebuilt]) == [False, True]
+    assert accepted_flags([a, b], copy.deepcopy([b, a])) == [True, True]
+    # a value anywhere in the nesting, None vs value, or bytes that differ
+    assert accepted_flags([a], [dict(a, nested={**a["nested"], "tags": ["a"]})]) == [False]
+    assert accepted_flags([a], [dict(a, s="x")]) == [False]
+    assert accepted_flags([a], [dict(a, b=bytearray(b"\x00"))]) == [False]
+    assert accepted_flags([a, b], []) == [False, False]
+    assert accepted_flags([], []) == []
+
+
+def test_accepted_flags_scale_linearly():
+    def best_time(n):
+        chunk = [dict(ROW, k=i, s=f"user{i}@example.com") for i in range(n)]
+        accepted = copy.deepcopy(chunk[::2])
+        times = []
+        for _ in range(5):
+            t0 = time.perf_counter()
+            flags = accepted_flags(chunk, accepted)
+            times.append(time.perf_counter() - t0)
+        assert sum(flags) == len(accepted)
+        return min(times)
+
+    # 8x the rows: linear work takes ~8x as long, a per-row scan of the
+    # chunk ~64x
+    assert best_time(20_000) / best_time(2_500) < 16
+
+
+def test_status_counts_and_reads_never_resend(spark, tmp_path):
+    log_dir = str(tmp_path)
+    df = spark.createDataFrame([(i,) for i in range(50)], ["k"]).repartition(3)
+    transport = LoggingTransport(log_dir, fail_predicate=lambda r: r["k"] % 5 == 0)
+    result = SinkExecutor(transport, batch_size=10).run(df)
+    sends = read_send_log(log_dir)
+    assert dict(result.counts) == {"ok": 40, "rejected": 10}
+    assert result.success.count() == 40 and result.errors.count() == 0
+    assert sorted(r["k"] for r in result.success.collect()) == [
+        i for i in range(50) if i % 5 != 0
+    ]
+    assert read_send_log(log_dir) == sends  # the reads above sent nothing
+    assert sum(n for attempts in sends.values() for _, n in attempts) == 50
+    result.release()
 
 
 def test_concurrent_sender_bounds_inflight_and_keeps_rate():

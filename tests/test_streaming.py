@@ -92,6 +92,30 @@ def test_foreach_batch_sink_bridge(spark, tmp_path):
     assert all(errs == 0 for _, _, errs in batches)
 
 
+def test_foreach_batch_sink_bridge_releases_every_batch(spark, tmp_path):
+    src = tmp_path / "src"
+    for i in range(3):
+        spark.createDataFrame([(f"{i}-{j}", j) for j in range(10)], "uuid string, v int") \
+            .coalesce(1).write.mode("append").parquet(str(src))
+    stream = (
+        spark.readStream.schema("uuid string, v int")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    jsc = spark.sparkContext._jsc
+    persisted_before = set(jsc.getPersistentRDDs().keys())
+    batches: list[tuple[int, int, int]] = []
+    q = stream_sink_foreach_batch(
+        stream,
+        sink_factory=lambda: SinkExecutor(MockTransport(lambda r: r["v"] == 0), batch_size=4),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        on_batch=lambda epoch, ok, errs: batches.append((epoch, ok, errs)),
+    )
+    q.awaitTermination(120)
+    assert batches == [(0, 9, 0), (1, 9, 0), (2, 9, 0)]
+    assert set(jsc.getPersistentRDDs().keys()) <= persisted_before
+
+
 def test_stateful_running_stats(spark, tmp_path):
     from megalista_spark.streaming.events import stream_user_running_stats
 
