@@ -22,6 +22,9 @@ key-salted by construction since bucket ids include the band index).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import Any
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -61,6 +64,52 @@ def _spread(df: DataFrame) -> DataFrame:
     run in one task. At cluster scale inputs arrive already multi-split;
     this is a no-op cost there (AQE coalesces the tiny shuffle)."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def _overlap(*jobs: tuple[str, Callable[[], Any]]) -> list:
+    """Run each ``(description, thunk)`` on its own driver thread, so
+    independent Spark jobs share the cluster; return the results in
+    argument order.
+
+    Each thread inherits the caller's local properties (job group,
+    scheduler pool, job tags) via ``inheritable_thread_target``, so
+    ``cancelJobGroup`` and per-group job counts see the overlapped work.
+    Its jobs carry ``description`` and a tag of their own. On the first
+    exception the other thunks' jobs are cancelled by tag, again until
+    their threads return (a job started after one cancel dies at the
+    next), and that first exception is re-raised.
+    """
+    from concurrent.futures import ThreadPoolExecutor, as_completed, wait
+    from uuid import uuid4
+
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.active()
+    sc = spark.sparkContext
+    tags = [f"megalista-overlap-{uuid4().hex}" for _ in jobs]
+
+    def tagged(description: str, thunk: Callable[[], Any], tag: str):
+        def run() -> Any:
+            sc.addJobTag(tag)
+            sc.setJobDescription(description)
+            return thunk()
+
+        return inheritable_thread_target(spark)(run)
+
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        futures = [
+            pool.submit(tagged(description, thunk, tag))
+            for (description, thunk), tag in zip(jobs, tags)
+        ]
+        first = next((f for f in as_completed(futures) if f.exception()), None)
+        if first is None:
+            return [f.result() for f in futures]
+        while running := [(f, t) for f, t in zip(futures, tags) if not f.done()]:
+            for _, tag in running:
+                sc.cancelJobsWithTag(tag)
+            wait([f for f, _ in running], timeout=0.1)
+    raise first.exception()
 
 
 def tokens_expr(text: Column) -> Column:
@@ -1802,51 +1851,32 @@ def lsh_candidate_precision(
     inherent verify cost, NOT corpus²) + one hash aggregate; final stats
     on the ≤ ``bands``-row table. Integer ppm.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    sc = df.sparkSession.sparkContext
-
-    def _build_cand() -> DataFrame:
-        sc.setJobDescription("lsh_candidate_precision: band candidates")
-        try:
-            return minhash_lsh_pairs(
+    # candidates and the shingle postings are independent corpus passes:
+    # overlap their checkpoint builds
+    cand, shingled = _overlap(
+        (
+            "lsh_candidate_precision: band candidates",
+            lambda: minhash_lsh_pairs(
                 df, num_hashes, bands, shingle_n, text_col, id_col
-            ).localCheckpoint(eager=True)
-        finally:
-            sc.setJobDescription(None)
-
-    def _build_shingled() -> DataFrame:
-        sc.setJobDescription("lsh_candidate_precision: shingle postings")
-        try:
-            return (
-                _tokenized(df, text_col, id_col)
-                .select(
-                    "id",
-                    shingles_from_tokens(F.col("_toks"), shingle_n).alias(
-                        "shingles"
-                    ),
-                )
-                .select(
-                    "id",
-                    F.size("shingles").alias("set_size"),
-                    F.explode_outer(
-                        F.transform(F.col("shingles"), portable_hash64)
-                    ).alias("shingle"),
-                )
-                .localCheckpoint(eager=True)
+            ).localCheckpoint(eager=True),
+        ),
+        (
+            "lsh_candidate_precision: shingle postings",
+            lambda: _tokenized(df, text_col, id_col)
+            .select(
+                "id",
+                shingles_from_tokens(F.col("_toks"), shingle_n).alias("shingles"),
             )
-        finally:
-            sc.setJobDescription(None)
-
-    # candidates and the shingle postings are independent corpus passes
-    # that were built sequentially — overlap them on two driver threads
-    # (the lsh_banding_curve idiom, guide §2.6); both checkpoints
-    # already existed, so this changes scheduling only
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cand = pool.submit(_build_cand)
-        f_shingled = pool.submit(_build_shingled)
-        cand = f_cand.result()
-        shingled = f_shingled.result()
+            .select(
+                "id",
+                F.size("shingles").alias("set_size"),
+                F.explode_outer(
+                    F.transform(F.col("shingles"), portable_hash64)
+                ).alias("shingle"),
+            )
+            .localCheckpoint(eager=True),
+        ),
+    )
     sa = shingled.select(
         F.col("id").alias("_ida"),
         F.col("set_size").alias("size_a"),
@@ -1921,42 +1951,28 @@ def lsh_candidate_recall(
     candidate table (both pair-sized, not corpus-sized) + two scalar
     aggregates.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    sc = df.sparkSession.sparkContext
-
-    def _build_truth() -> DataFrame:
-        sc.setJobDescription("lsh_candidate_recall: exact ground truth")
-        try:
-            return ngram_jaccard_pairs(
+    # the two generators are independent dataflows — overlap their
+    # builds so the exact-Jaccard ground truth does not serialize ahead of
+    # the signature/banding pass; candidates are materialized (pair-sized,
+    # the banding-curve durability class) so the overlap covers their
+    # build, not just their plan
+    true_pairs, cand = _overlap(
+        (
+            "lsh_candidate_recall: exact ground truth",
+            lambda: ngram_jaccard_pairs(
                 df, n=shingle_n, threshold=threshold,
                 text_col=text_col, id_col=id_col,
-            ).select("doc_a", "doc_b").localCheckpoint(eager=True)
-        finally:
-            sc.setJobDescription(None)
-
-    def _build_cand() -> DataFrame:
-        sc.setJobDescription("lsh_candidate_recall: band candidates")
-        try:
-            return minhash_lsh_pairs(
+            ).select("doc_a", "doc_b").localCheckpoint(eager=True),
+        ),
+        (
+            "lsh_candidate_recall: band candidates",
+            lambda: minhash_lsh_pairs(
                 df, num_hashes, bands, shingle_n, text_col, id_col
             ).select(
                 F.col("doc_a").alias("_ca"), F.col("doc_b").alias("_cb")
-            ).localCheckpoint(eager=True)
-        finally:
-            sc.setJobDescription(None)
-
-    # the two generators are independent dataflows — overlap their
-    # builds on two driver threads (the lsh_banding_curve idiom, guide
-    # §2.6), so the exact-Jaccard ground truth no longer serializes
-    # ahead of the signature/banding pass; candidates are materialized
-    # (pair-sized, the banding-curve durability class) so the overlap
-    # covers their build, not just their plan
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_true = pool.submit(_build_truth)
-        f_cand = pool.submit(_build_cand)
-        true_pairs = f_true.result()
-        cand = f_cand.result()
+            ).localCheckpoint(eager=True),
+        ),
+    )
     # ONE pair-sized pass instead of three (semi-join + two separate
     # counts): candidates are distinct (grouped emission) and ground
     # truth is distinct, so the left join is 1-1 — count(*) is
@@ -2054,36 +2070,23 @@ def lsh_banding_curve(
                 f"lsh_banding_curve: bands={bands} does not divide "
                 f"num_hashes={num_hashes}"
             )
-    from concurrent.futures import ThreadPoolExecutor
-
-    sc = df.sparkSession.sparkContext
-
-    def _build_sigs() -> DataFrame:
-        sc.setJobDescription("lsh_banding_curve: minhash signatures")
-        try:
-            return minhash_signatures(
+    # the two corpus-sized inputs are independent — overlap their
+    # checkpoint builds
+    sigs, true_pairs = _overlap(
+        (
+            "lsh_banding_curve: minhash signatures",
+            lambda: minhash_signatures(
                 df, num_hashes, shingle_n, text_col, id_col
-            ).localCheckpoint(eager=True)
-        finally:
-            sc.setJobDescription(None)
-
-    def _build_truth() -> DataFrame:
-        sc.setJobDescription("lsh_banding_curve: exact ground truth")
-        try:
-            return ngram_jaccard_pairs(
+            ).localCheckpoint(eager=True),
+        ),
+        (
+            "lsh_banding_curve: exact ground truth",
+            lambda: ngram_jaccard_pairs(
                 df, n=shingle_n, threshold=threshold,
                 text_col=text_col, id_col=id_col,
-            ).select("doc_a", "doc_b").localCheckpoint(eager=True)
-        finally:
-            sc.setJobDescription(None)
-
-    # the two corpus-sized inputs are independent — overlap their
-    # checkpoint builds (guide §2.6; job descriptions are thread-local)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_sigs = pool.submit(_build_sigs)
-        f_true = pool.submit(_build_truth)
-        sigs = f_sigs.result()
-        true_pairs = f_true.result()
+            ).select("doc_a", "doc_b").localCheckpoint(eager=True),
+        ),
+    )
     n_true = true_pairs.count()
     tp = true_pairs.select(
         F.col("doc_a").alias("_ca"),
@@ -2094,25 +2097,21 @@ def lsh_banding_curve(
     def _fold(bands: int) -> tuple:
         r = num_hashes // bands
         theory_ppm = round(1_000_000 * (1.0 - (1.0 - threshold**r) ** bands))
-        sc.setJobDescription(f"lsh_banding_curve: fold bands={bands}")
-        try:
-            cand = _band_candidate_pairs(sigs, num_hashes, bands, id_col).select(
-                F.col("doc_a").alias("_ca"), F.col("doc_b").alias("_cb")
+        cand = _band_candidate_pairs(sigs, num_hashes, bands, id_col).select(
+            F.col("doc_a").alias("_ca"), F.col("doc_b").alias("_cb")
+        )
+        # candidates are distinct pairs (grouped emission), ground truth
+        # is distinct, so the left join is 1-1: count(*) = n_candidates,
+        # count(_tp) = |candidates ∩ true| = n_caught (true positives —
+        # true pairs ARE verified ≥ t)
+        n_cand, n_caught = (
+            cand.join(tp, ["_ca", "_cb"], "left")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_candidates"),
+                F.count("_tp").cast("long").alias("n_caught"),
             )
-            # candidates are distinct pairs (grouped emission), ground
-            # truth is distinct, so the left join is 1-1: count(*) =
-            # n_candidates, count(_tp) = |candidates ∩ true| = n_caught
-            # (true positives — true pairs ARE verified ≥ t)
-            n_cand, n_caught = (
-                cand.join(tp, ["_ca", "_cb"], "left")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_candidates"),
-                    F.count("_tp").cast("long").alias("n_caught"),
-                )
-                .collect()[0]
-            )
-        finally:
-            sc.setJobDescription(None)
+            .collect()[0]
+        )
         return (
             bands,
             r,
@@ -2134,11 +2133,14 @@ def lsh_banding_curve(
         batches.append([order[lo]] if lo == hi else [order[lo], order[hi]])
         lo, hi = lo + 1, hi - 1
     results: dict[int, tuple] = {}
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for batch in batches:
-            for i, row in zip(
-                batch, pool.map(lambda i: _fold(bands_options[i]), batch)
-            ):
-                results[i] = row
+    for batch in batches:
+        folded = _overlap(*(
+            (
+                f"lsh_banding_curve: fold bands={bands_options[i]}",
+                lambda b=bands_options[i]: _fold(b),
+            )
+            for i in batch
+        ))
+        results.update(zip(batch, folded))
     rows = [results[i] for i in range(len(bands_options))]
     return df.sparkSession.createDataFrame(rows, out_schema)

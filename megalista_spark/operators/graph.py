@@ -57,112 +57,26 @@ def pagerank(
 
     Per iteration, with integer floor division throughout::
 
-        share(e)   = rank_u[src] div out_deg[src]          (per edge)
+        share(e)   = rank_u[src] · w(e) div W(src)         (per edge)
         inflow(v)  = Σ share(e) over e with e.dst = v      (the shuffle)
         dangling   = Σ rank_u over nodes with out_deg = 0  (scalar)
         rank_u'(v) = (100-d)·(scale div N) div 100
                      + d·(inflow(v) + dangling div N) div 100
 
-    ``damping_pct`` is the damping factor in percent so the recurrence
-    stays in integer arithmetic end-to-end. Floor division sheds a
-    deterministic sub-micro-unit of mass per step — identically in every
-    engine — which is the price of bit-exact reproducibility; at
-    ``scale=1e12`` the relative error is ~1e-9 per iteration.
+    ``w`` is ``weight_col`` (positive integers, max_w · scale < 2^63) or
+    1; W(src) is the node's total outgoing weight; ``damping_pct`` keeps
+    the damping factor integral. Floor division sheds a deterministic
+    sub-micro-unit of mass per step, identically in every engine: the
+    price of bit-exact reproducibility (~1e-9 relative per iteration).
 
-    Returns ``(node, rank_u, rank)`` where ``rank = round(rank_u/scale,
-    6)``; ``rank_u`` is the exact fixed-point value an oracle must match.
-
-    Scale: edges/degrees computed once, hash-partitioned on ``src`` and
-    persisted; each iteration re-shuffles only the O(nodes) rank table to
-    the edge partitioning and then one partial-agg sum per ``dst``. No
-    driver-side collection of node state, ever.
+    Returns ``(node, rank_u, rank)``, ``rank = round(rank_u/scale, 6)``;
+    ``rank_u`` is the exact fixed-point value an oracle must match. An
+    empty edge list yields an empty frame. This is
+    ``personalized_pagerank`` with every node a seed (N = |S|); the seed
+    flag is the literal ``true``, so no seed join is planned.
     """
-    if iterations < 0:
-        raise ValueError("iterations must be >= 0")
-    # weighted form: share(e) = rank_u * w(e) div W(src) where W is the
-    # node's total outgoing weight. Unweighted is the w = 1 special case
-    # (sum of ones == count), so one kernel serves both. Weights must be
-    # positive integers with max_w * scale < 2^63 (max_w ~ 9e6 at the
-    # default scale) so the share product stays in int64.
-    w_expr = (
-        F.lit(1).cast("long")
-        if weight_col is None
-        else F.col(weight_col).cast("long")
-    )
-    e = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst"), w_expr.alias("_w")
-    ).repartition("_src").persist()
-    deg = e.groupBy("_src").agg(F.sum("_w").cast("long").alias("_deg")).persist()
-    nodes = (
-        e.select(F.col("_src").alias("node"))
-        .union(e.select(F.col("_dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()  # scalar; also materializes the persisted inputs
-    base_u = scale // n  # teleport share per node, exact in both engines
-
-    ranks = nodes.select("node", F.lit(base_u).cast("long").alias("rank_u"))
-    prev = None
-    for _ in range(iterations):
-        ranks = ranks.persist()
-        # dangling mass: rank held by nodes with no out-edges (scalar —
-        # the only node-state that touches the driver). This per-round
-        # action is deliberate: it eagerly materializes the ranks cache
-        # before the two downstream consumers (this aggregate + the
-        # contribution join) read it — a lazy single-job formulation was
-        # MEASURED SLOWER here (r12 A/B) because concurrent stages
-        # recompute partitions whose cache blocks are not populated yet.
-        # r13 also tried folding this scalar into the plan (per-round
-        # eager localCheckpoint + crossJoin(broadcast(1-row dangling
-        # agg)), zero driver round-trips): 4-round alternating A/B was
-        # WORSE (pagerank_supply_graph cold ~13.4 -> ~19.0 s in 3/4
-        # rounds; /tmp/r13_ab_pr2.out) — the per-round checkpoint writes
-        # every rank block where persist+first() only touches the agg,
-        # and the broadcast adds an AQE exchange per round. Reverted.
-        dangling = (
-            ranks.join(deg, ranks["node"] == deg["_src"], "left_anti")
-            .agg(F.coalesce(F.sum("rank_u"), F.lit(0)).cast("long"))
-            .first()[0]
-        )
-        contrib = (
-            e.join(deg, "_src")
-            .join(ranks.withColumnRenamed("node", "_src"), "_src")
-            .select(
-                F.col("_dst").alias("node"),
-                F.expr("(rank_u * _w) div _deg").alias("_share"),
-            )
-            .groupBy("node")
-            .agg(F.sum("_share").cast("long").alias("_inflow"))
-        )
-        teleport_u = (100 - damping_pct) * base_u // 100
-        dangling_share = dangling // n
-        new = nodes.join(contrib, "node", "left").select(
-            "node",
-            (
-                F.lit(teleport_u)
-                + F.expr(
-                    f"{damping_pct} * (coalesce(_inflow, 0L) + {dangling_share}L) div 100"
-                )
-            ).cast("long").alias("rank_u"),
-        )
-        if prev is not None:
-            prev.unpersist()
-        prev = ranks
-        ranks = new
-    out = ranks.select(
-        "node",
-        "rank_u",
-        F.round(F.col("rank_u") / F.lit(float(scale)), 6).alias("rank"),
-    )
-    # eager-materialize the O(nodes) result once (lineage truncated), then
-    # release every persisted intermediate — a long-lived session running
-    # hundreds of queries must not accumulate e/deg/nodes blocks per call
-    out = out.localCheckpoint(eager=True)
-    for cached in (e, deg, nodes, prev):
-        if cached is not None:
-            cached.unpersist()
-    return out
+    return _pagerank(edges, None, src, dst, iterations, damping_pct, scale,
+                     "id", weight_col)
 
 
 def personalized_pagerank(
@@ -176,69 +90,80 @@ def personalized_pagerank(
     seed_col: str = "id",
     weight_col: str | None = None,
 ) -> DataFrame:
-    """Personalized (topic-sensitive) PageRank: identical fixed-point
-    kernel to ``pagerank``, but teleport AND dangling mass return only
-    to the SEED set — rank becomes proximity-to-seeds, the
-    recommendation / similar-entities primitive (Haveliwala 2002;
-    public method), where global PageRank measures importance.
+    """Personalized (topic-sensitive) PageRank: the ``pagerank`` kernel,
+    but teleport AND dangling mass return only to the SEED set S — rank
+    becomes proximity-to-seeds, the recommendation / similar-entities
+    primitive (Haveliwala 2002; public method), where global PageRank
+    measures importance.
 
         rank'(v) = [v∈S]·(100-d)·(scale div |S|) div 100
                    + d·(inflow(v) + [v∈S]·(dangling div |S|)) div 100
 
-    Same integer-only discipline (floor div everywhere) so the
-    recurrence is bit-exact cross-engine; same one-shuffle-per-round
-    cost model with persisted co-partitioned edges; the seed flag rides
-    the node table (one broadcast-sized join at setup, not per round).
-    Off-graph seeds contribute nothing (their teleport share sheds —
-    deterministic on every engine since |S| counts the raw seed set).
-    ``weight_col`` applies the same positive-integer edge weighting as
-    ``pagerank`` (share = rank·w div W) — heavy trade links carry
-    proportionally more proximity mass.
-
-    Returns (node, rank_u, rank) over the graph's nodes.
+    The seed flag rides the node table (one join at setup, not per
+    round). Off-graph seeds contribute nothing (their teleport share
+    sheds — deterministic on every engine since |S| counts the raw seed
+    set). An empty seed set raises ``ValueError``. Returns ``pagerank``'s
+    columns over the graph's nodes.
     """
+    return _pagerank(edges, seeds, src, dst, iterations, damping_pct, scale,
+                     seed_col, weight_col)
+
+
+def _pagerank(edges: DataFrame, seeds: DataFrame | None, src: str, dst: str,
+              iterations: int, damping_pct: int, scale: int, seed_col: str,
+              weight_col: str | None) -> DataFrame:
+    """The one PageRank loop; ``seeds=None`` makes every node a seed."""
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
-    w_expr = (
-        F.lit(1).cast("long")
-        if weight_col is None
-        else F.col(weight_col).cast("long")
-    )
+    w_expr = F.lit(1) if weight_col is None else F.col(weight_col)
     e = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst"), w_expr.alias("_w")
+        F.col(src).alias("_src"), F.col(dst).alias("_dst"),
+        w_expr.cast("long").alias("_w"),
     ).repartition("_src").persist()
     deg = e.groupBy("_src").agg(F.sum("_w").cast("long").alias("_deg")).persist()
-    s = seeds.select(F.col(seed_col).alias("node")).distinct().persist()
-    ns = s.count()
-    if ns == 0:
-        raise ValueError(
-            "personalized_pagerank: the seed set is empty — every teleport "
-            "share would divide by zero. Check the seed filter."
-        )
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
         .distinct()
-        .join(s.withColumn("_is_seed", F.lit(True)), "node", "left")
-        .select("node", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
-        .persist()
     )
-    nodes.count()
-    base_u = scale // ns
+    s = None
+    if seeds is None:
+        is_seed = "true"  # a literal: the flag folds out of every plan
+        nodes = nodes.persist()
+        ns = max(nodes.count(), 1)  # |S| = N; no node, no rank to divide
+    else:
+        is_seed = "_is_seed"
+        s = seeds.select(F.col(seed_col).alias("node")).distinct().persist()
+        ns = s.count()
+        if ns == 0:
+            raise ValueError(
+                "personalized_pagerank: the seed set is empty — every teleport "
+                "share would divide by zero. Check the seed filter."
+            )
+        nodes = (
+            nodes.join(s.withColumn("_is_seed", F.lit(True)), "node", "left")
+            .select("node", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed"))
+            .persist()
+        )
+        nodes.count()
+    base_u = scale // ns  # teleport share per seed, exact in both engines
     teleport_u = (100 - damping_pct) * base_u // 100
+    def seeded(value: int) -> str:
+        return f"CASE WHEN {is_seed} THEN {value}L ELSE 0L END"
 
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("_is_seed"), F.lit(base_u)).otherwise(F.lit(0))
-        .cast("long").alias("rank_u"),
-    )
+    ranks = nodes.select("node", F.expr(seeded(base_u)).alias("rank_u"))
     prev = None
     for _ in range(iterations):
         ranks = ranks.persist()
-        # per-round scalar action on purpose (and the r13 broadcast-
-        # dangling fold was A/B-measured worse here too — see pagerank)
-        # — eagerly materializes the
-        # ranks cache before its two consumers read it (see pagerank)
+        # dangling mass: rank held by nodes with no out-edges, the only
+        # node state that reaches the driver. The per-round action is
+        # deliberate: it fills the ranks cache before its two consumers
+        # read it (r12: a lazy single-job form was slower; concurrent
+        # stages recomputed unpopulated blocks). r13 folded the scalar
+        # into the plan (per-round localCheckpoint + broadcast 1-row agg):
+        # worse, pagerank_supply_graph cold ~13.4 -> ~19.0 s in 3 of 4
+        # alternating A/B rounds (every rank block written, plus an AQE
+        # exchange per round). Reverted.
         dangling = (
             ranks.join(deg, ranks["node"] == deg["_src"], "left_anti")
             .agg(F.coalesce(F.sum("rank_u"), F.lit(0)).cast("long"))
@@ -254,26 +179,21 @@ def personalized_pagerank(
             .groupBy("node")
             .agg(F.sum("_share").cast("long").alias("_inflow"))
         )
-        dangling_share = dangling // ns
         new = nodes.join(contrib, "node", "left").select(
             "node",
-            (
-                F.when(F.col("_is_seed"), F.lit(teleport_u)).otherwise(F.lit(0))
-                + F.expr(
-                    f"{damping_pct} * (coalesce(_inflow, 0L)"
-                    f" + (CASE WHEN _is_seed THEN {dangling_share}L ELSE 0L END))"
-                    " div 100"
-                )
+            F.expr(
+                f"{seeded(teleport_u)} + {damping_pct} * (coalesce(_inflow, 0L)"
+                f" + {seeded(dangling // ns)}) div 100"
             ).cast("long").alias("rank_u"),
         )
         if prev is not None:
             prev.unpersist()
         prev = ranks
         ranks = new
-    out = ranks.select(
-        "node",
-        "rank_u",
-        F.round(F.col("rank_u") / F.lit(float(scale)), 6).alias("rank"),
+    # materialize the O(nodes) result once, then release every persisted
+    # intermediate so a long-lived session accumulates no blocks per call
+    out = ranks.withColumn(
+        "rank", F.round(F.col("rank_u") / F.lit(float(scale)), 6)
     ).localCheckpoint(eager=True)
     for cached in (e, deg, s, nodes, prev):
         if cached is not None:

@@ -29,6 +29,9 @@ FAST_TESTS = frozenset(
         "test_setsim_prefix_pairs_exact_jaccard",
         "test_containment_matches_python_sets",
         "test_dedup_repeated_spans_keeps_owner_only",
+        "test_overlap_jobs_run_under_the_callers_job_group",
+        "test_overlap_first_error_cancels_the_sibling",
+        "test_lsh_banding_curve_row_matches_recall_audit",
         # similarity / ANN / clustering
         "test_cosine_topk",
         "test_embedding_near_dup",
@@ -40,6 +43,7 @@ FAST_TESTS = frozenset(
         "test_triangle_count_k4_with_noise",
         "test_clustering_stats_k4_with_pendant",
         "test_pagerank_fixed_point_invariants",
+        "test_pagerank_empty_graph_returns_empty_frame",
         "test_personalized_pagerank_localizes_to_seeds",
         "test_k_hop_reach_min_hops",
         "test_bounded_sssp_relaxes_through_cheaper_path",

@@ -1381,6 +1381,15 @@ def test_pagerank_zero_iterations_uniform(spark):
     assert {r["rank_u"] for r in rows} == {PAGERANK_SCALE // 3}
 
 
+def test_pagerank_empty_graph_returns_empty_frame(spark):
+    from megalista_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    out = pagerank(edges, iterations=2)
+    assert out.columns == ["node", "rank_u", "rank"]
+    assert out.collect() == []
+
+
 def test_merge_upsert_actions(spark):
     from megalista_spark.operators.cdc import merge_upsert
 
@@ -2360,6 +2369,20 @@ def test_personalized_pagerank_localizes_to_seeds(spark):
     g = {r["node"]: r["rank_u"] for r in
          pagerank(edges, iterations=3).collect()}
     assert g[1] == g[10]
+    # global pagerank IS the every-node-is-a-seed case, bit for bit,
+    # unweighted and weighted (node 4 is dangling, so dangling mass moves)
+    edges = spark.createDataFrame(
+        [(1, 2, 3), (2, 3, 1), (3, 1, 2), (3, 4, 5), (10, 11, 1),
+         (11, 12, 2), (12, 10, 7)],
+        ["src", "dst", "w"],
+    )
+    every = edges.select(F.col("src").alias("id")).union(edges.select("dst"))
+    for w in (None, "w"):
+        ppr = {r["node"]: r["rank_u"] for r in personalized_pagerank(
+            edges, every, iterations=3, weight_col=w).collect()}
+        pr = {r["node"]: r["rank_u"] for r in
+              pagerank(edges, iterations=3, weight_col=w).collect()}
+        assert ppr == pr and len(pr) == 7
 
 
 def test_bpe_grouped_trains_independent_tokenizers(spark):
@@ -3223,10 +3246,7 @@ def test_lsh_candidate_recall_bruteforce(spark):
         ngram_jaccard_pairs,
     )
 
-    texts = [(i, "shared long base text for near duplicate documents variant "
-              + str(i % 2)) for i in range(6)]
-    texts += [(100 + i, f"other corpus entry number {i} " * 3) for i in range(3)]
-    df = spark.createDataFrame(texts, ["doc_id", "text"])
+    df = _lsh_audit_corpus(spark)
     got = lsh_candidate_recall(df, 16, 4, threshold=0.5).collect()[0]
     truth = {(r["doc_a"], r["doc_b"])
              for r in ngram_jaccard_pairs(df, n=3, threshold=0.5).collect()}
@@ -3236,6 +3256,81 @@ def test_lsh_candidate_recall_bruteforce(spark):
     assert got["n_caught"] == len(truth & cand)
     if truth:
         assert got["recall_ppm"] == 1_000_000 * len(truth & cand) // len(truth)
+
+
+def _lsh_audit_corpus(spark):
+    texts = [(i, "shared long base text for near duplicate documents variant "
+              + str(i % 2)) for i in range(6)]
+    texts += [(100 + i, f"other corpus entry number {i} " * 3) for i in range(3)]
+    return spark.createDataFrame(texts, ["doc_id", "text"])
+
+
+def test_lsh_banding_curve_row_matches_recall_audit(spark):
+    from megalista_spark.operators.dedup import (
+        lsh_banding_curve,
+        lsh_candidate_recall,
+    )
+
+    df = _lsh_audit_corpus(spark)
+    cols = ["n_true_pairs", "n_candidates", "n_caught", "recall_ppm"]
+    (curve,) = lsh_banding_curve(df, 16, bands_options=(4,)).collect()
+    recall = lsh_candidate_recall(df, 16, 4).collect()[0]
+    assert (curve["bands"], curve["rows_per_band"]) == (4, 4)
+    assert [curve[c] for c in cols] == [recall[c] for c in cols]
+    assert curve["n_true_pairs"] > 0
+
+
+def test_overlap_jobs_run_under_the_callers_job_group(spark):
+    from megalista_spark.operators.dedup import lsh_candidate_recall
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("overlap-group-test", "lsh_candidate_recall under a group")
+    try:
+        lsh_candidate_recall(_lsh_audit_corpus(spark), 16, 4).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # every job the call ran, the overlapped builds' included, is in the
+    # caller's group; none escaped it
+    assert len(tracker.getJobIdsForGroup("overlap-group-test")) >= 3
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def test_overlap_first_error_cancels_the_sibling(spark):
+    import time
+
+    from megalista_spark.operators.dedup import _overlap
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def slow_job():
+        # ~60 s of task time on two cores unless cancelled
+        return sc.parallelize(range(2), 2).map(
+            lambda x: __import__("time").sleep(60) or x
+        ).collect()
+
+    def fail():
+        time.sleep(1)  # let the sibling's job start
+        raise ValueError("build failed")
+
+    sc.setJobGroup("overlap-cancel-test", "first error cancels the sibling")
+    try:
+        t0 = time.monotonic()
+        with pytest.raises(ValueError, match="build failed"):
+            _overlap(("slow sibling", slow_job), ("failing build", fail))
+        elapsed = time.monotonic() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert elapsed < 30
+    (job,) = tracker.getJobIdsForGroup("overlap-cancel-test")
+    deadline = time.monotonic() + 10
+    while tracker.getJobInfo(job).status != "FAILED":
+        assert time.monotonic() < deadline
+        time.sleep(0.1)
 
 
 def test_ivf_index_roundtrip_equals_direct(spark, tmp_path):
