@@ -76,6 +76,8 @@ def _lloyd(
     n_train = vecs.count()
     parts = min(sc.defaultParallelism, max(1, -(-n_train * k // 25_000)))
     vecs = vecs.repartition(parts, "vid").persist()
+    # single-partition window, but over the orderBy("vid").limit(k) output:
+    # it never sees more than k rows
     w_init = Window.orderBy("vid")
     centroids = (
         vecs.orderBy("vid")

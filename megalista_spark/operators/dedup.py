@@ -22,11 +22,10 @@ key-salted by construction since bucket ids include the band index).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from typing import Any
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from megalista_spark.runtime import overlap
 
 # ---------------------------------------------------------------- helpers
 
@@ -64,52 +63,6 @@ def _spread(df: DataFrame) -> DataFrame:
     run in one task. At cluster scale inputs arrive already multi-split;
     this is a no-op cost there (AQE coalesces the tiny shuffle)."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
-def _overlap(*jobs: tuple[str, Callable[[], Any]]) -> list:
-    """Run each ``(description, thunk)`` on its own driver thread, so
-    independent Spark jobs share the cluster; return the results in
-    argument order.
-
-    Each thread inherits the caller's local properties (job group,
-    scheduler pool, job tags) via ``inheritable_thread_target``, so
-    ``cancelJobGroup`` and per-group job counts see the overlapped work.
-    Its jobs carry ``description`` and a tag of their own. On the first
-    exception the other thunks' jobs are cancelled by tag, again until
-    their threads return (a job started after one cancel dies at the
-    next), and that first exception is re-raised.
-    """
-    from concurrent.futures import ThreadPoolExecutor, as_completed, wait
-    from uuid import uuid4
-
-    from pyspark import inheritable_thread_target
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.active()
-    sc = spark.sparkContext
-    tags = [f"megalista-overlap-{uuid4().hex}" for _ in jobs]
-
-    def tagged(description: str, thunk: Callable[[], Any], tag: str):
-        def run() -> Any:
-            sc.addJobTag(tag)
-            sc.setJobDescription(description)
-            return thunk()
-
-        return inheritable_thread_target(spark)(run)
-
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futures = [
-            pool.submit(tagged(description, thunk, tag))
-            for (description, thunk), tag in zip(jobs, tags)
-        ]
-        first = next((f for f in as_completed(futures) if f.exception()), None)
-        if first is None:
-            return [f.result() for f in futures]
-        while running := [(f, t) for f, t in zip(futures, tags) if not f.done()]:
-            for _, tag in running:
-                sc.cancelJobsWithTag(tag)
-            wait([f for f, _ in running], timeout=0.1)
-    raise first.exception()
 
 
 def tokens_expr(text: Column) -> Column:
@@ -1853,7 +1806,7 @@ def lsh_candidate_precision(
     """
     # candidates and the shingle postings are independent corpus passes:
     # overlap their checkpoint builds
-    cand, shingled = _overlap(
+    cand, shingled = overlap(
         (
             "lsh_candidate_precision: band candidates",
             lambda: minhash_lsh_pairs(
@@ -1956,7 +1909,7 @@ def lsh_candidate_recall(
     # the signature/banding pass; candidates are materialized (pair-sized,
     # the banding-curve durability class) so the overlap covers their
     # build, not just their plan
-    true_pairs, cand = _overlap(
+    true_pairs, cand = overlap(
         (
             "lsh_candidate_recall: exact ground truth",
             lambda: ngram_jaccard_pairs(
@@ -2072,7 +2025,7 @@ def lsh_banding_curve(
             )
     # the two corpus-sized inputs are independent — overlap their
     # checkpoint builds
-    sigs, true_pairs = _overlap(
+    sigs, true_pairs = overlap(
         (
             "lsh_banding_curve: minhash signatures",
             lambda: minhash_signatures(
@@ -2134,7 +2087,7 @@ def lsh_banding_curve(
         lo, hi = lo + 1, hi - 1
     results: dict[int, tuple] = {}
     for batch in batches:
-        folded = _overlap(*(
+        folded = overlap(*(
             (
                 f"lsh_banding_curve: fold bands={bands_options[i]}",
                 lambda b=bands_options[i]: _fold(b),

@@ -12,13 +12,23 @@ Spark shape:
 - each branch is lazy DataFrame work run by one sink job inside a
   try/except — a failing branch records an error and the run continues
   (reference safe_process error isolation, uploaders/utils.py:69-88);
-- the run summary is a driver-side list of per-branch results; exit code 1
-  if any branch recorded errors (reference main.py:106-121).
+- branches run concurrently in lanes, one driver thread per lane
+  (``runtime.overlap``), so their Spark jobs share the cluster the way
+  the reference's parallel branches do. Branches that write one control
+  table share a lane and run in config order, so a later branch's
+  anti-join sees the keys an earlier one appended; every other branch
+  has a lane of its own. The config bounds the number of lanes. Each
+  branch's jobs carry the description ``branch <source> → <destination>``
+  and stay in the caller's job group;
+- the run summary is a driver-side list of per-branch results in config
+  order; exit code 1 if any branch recorded errors (reference
+  main.py:106-121).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +40,7 @@ from megalista_spark.models.execution import (
     TransactionalType,
     group_executions_by_source,
 )
+from megalista_spark.runtime import overlap
 from megalista_spark.schema.registry import (
     SchemaValidationError,
     aggregate_custom_variables,
@@ -37,7 +48,11 @@ from megalista_spark.schema.registry import (
 )
 from megalista_spark.sinks.executor import SinkExecutor
 from megalista_spark.sinks.transports import DryRunTransport, Transport
-from megalista_spark.sources.data_source import anti_join_uploaded, get_data_source
+from megalista_spark.sources.data_source import (
+    DataSource,
+    anti_join_uploaded,
+    get_data_source,
+)
 
 # Per-destination-family row transform applied between schema projection
 # and upload (reference: hashing mappers + data treatments).
@@ -111,7 +126,9 @@ class Pipeline:
         self.error_notifier = error_notifier
 
     def run(self) -> RunResult:
-        results: list[BranchResult] = []
+        results: list[BranchResult | None] = []
+        lanes: dict[tuple, list[tuple[int, Execution, DataSource, DataFrame]]] = {}
+        shared: list[DataFrame] = []
         for source_name, execs in group_executions_by_source(self.executions).items():
             ds = get_data_source(self.spark, execs[0].source)
             try:
@@ -125,9 +142,24 @@ class Pipeline:
             # read-once-per-source: cache only when >1 branch shares the scan
             if len(execs) > 1:
                 raw = raw.cache()
+                shared.append(raw)
             for e in execs:
-                results.append(self._run_branch(e, ds, raw))
-            if len(execs) > 1:
+                lanes.setdefault(_lane(e, ds, len(results)), []).append(
+                    (len(results), e, ds, raw)
+                )
+                results.append(None)
+        sc = self.spark.sparkContext
+
+        def run_lane(lane: list[tuple[int, Execution, DataSource, DataFrame]]) -> None:
+            for i, e, ds, raw in lane:
+                sc.setJobDescription(f"branch {e.source.name} → {e.destination.name}")
+                results[i] = self._run_branch(e, ds, raw)
+
+        try:
+            if lanes:
+                overlap(*(("pipeline lane", partial(run_lane, lane)) for lane in lanes.values()))
+        finally:
+            for raw in shared:
                 raw.unpersist()
         failed = [b for b in results if not b.ok]
         if failed:
@@ -166,6 +198,15 @@ class Pipeline:
         except Exception as exc:  # branch isolation (safe_process)
             res.errors.append(f"{type(exc).__name__}: {exc}")
         return res
+
+
+def _lane(execution: Execution, ds: DataSource, index: int) -> tuple:
+    """Branches that write one control table share a lane; every other
+    branch gets a lane of its own."""
+    txn = get_schema(execution.destination.destination_type).transactional_type
+    if txn == TransactionalType.NOT_TRANSACTIONAL:
+        return ("branch", index)
+    return ("control", ds.control_path())
 
 
 def run_from_config(

@@ -101,6 +101,10 @@ FAST_TESTS = frozenset(
         "test_accepted_flags_scale_linearly",
         "test_status_counts_and_reads_never_resend",
         "test_run_sends_each_chunk_once_and_leaves_nothing_persisted",
+        "test_branches_of_one_source_run_concurrently",
+        "test_shared_source_is_evaluated_once_across_concurrent_branches",
+        "test_branches_sharing_a_control_table_run_in_config_order",
+        "test_run_jobs_stay_in_the_callers_job_group",
         "test_foreach_batch_sink_bridge_releases_every_batch",
         "test_ads_oci_payload_golden",
         "test_sheet_config_only_yes_schedules",

@@ -3301,7 +3301,7 @@ def test_overlap_jobs_run_under_the_callers_job_group(spark):
 def test_overlap_first_error_cancels_the_sibling(spark):
     import time
 
-    from megalista_spark.operators.dedup import _overlap
+    from megalista_spark.runtime import overlap
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -3320,7 +3320,7 @@ def test_overlap_first_error_cancels_the_sibling(spark):
     try:
         t0 = time.monotonic()
         with pytest.raises(ValueError, match="build failed"):
-            _overlap(("slow sibling", slow_job), ("failing build", fail))
+            overlap(("slow sibling", slow_job), ("failing build", fail))
         elapsed = time.monotonic() - t0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -5,7 +5,7 @@ from __future__ import annotations
 import copy
 import json
 import os
-import time
+import sys
 
 from megalista_spark.models.execution import DestinationType
 from megalista_spark.sinks.executor import BATCH_SIZES, SinkExecutor, accepted_flags
@@ -105,20 +105,28 @@ def test_accepted_flags_match_by_value():
 
 
 def test_accepted_flags_scale_linearly():
-    def best_time(n):
+    def calls(n):
+        # Python and builtin calls made while matching: a count of work
+        # that does not move with host load, unlike wall time
         chunk = [dict(ROW, k=i, s=f"user{i}@example.com") for i in range(n)]
         accepted = copy.deepcopy(chunk[::2])
-        times = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            flags = accepted_flags(chunk, accepted)
-            times.append(time.perf_counter() - t0)
-        assert sum(flags) == len(accepted)
-        return min(times)
+        count = 0
 
-    # 8x the rows: linear work takes ~8x as long, a per-row scan of the
+        def profile(frame, event, arg):
+            nonlocal count
+            count += event in ("call", "c_call")
+
+        sys.setprofile(profile)
+        try:
+            flags = accepted_flags(chunk, accepted)
+        finally:
+            sys.setprofile(None)
+        assert sum(flags) == len(accepted)
+        return count
+
+    # 8x the rows: linear work makes ~8x the calls, a per-row scan of the
     # chunk ~64x
-    assert best_time(20_000) / best_time(2_500) < 16
+    assert calls(20_000) / calls(2_500) < 16
 
 
 def test_status_counts_and_reads_never_resend(spark, tmp_path):
